@@ -193,10 +193,14 @@ def run_ann_index_split(spark) -> dict:
     at a fixed trained index — the regression-visible numbers a deployment
     cares about (the registry's ivfpq_* rows deliberately retrain per call
     for oracle independence, which makes their timings ~80% training)."""
+    import shutil
     import tempfile
+
+    from pyspark.sql import functions as F
 
     from wolf_quake_spark.analysis.ann_index import (
         ivfpq_build_index,
+        ivfpq_index_batch_search,
         ivfpq_index_encode,
         ivfpq_index_search,
     )
@@ -205,38 +209,37 @@ def run_ann_index_split(spark) -> dict:
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     qv = _query_vec(spark, SF_DIR)
     idx = tempfile.mkdtemp(prefix="wqs_bench_ivfpq_")
-    t0 = time.monotonic()
-    rep = ivfpq_build_index(emb, idx)
-    build_secs = time.monotonic() - t0
-
-    search_trials = []
-    for _ in range(3):
+    try:
         t0 = time.monotonic()
-        ivfpq_index_search(spark, idx, qv, n_probes=3, k=10).write.mode(
+        rep = ivfpq_build_index(emb, idx)
+        build_secs = time.monotonic() - t0
+
+        search_trials = []
+        for _ in range(3):
+            t0 = time.monotonic()
+            ivfpq_index_search(spark, idx, qv, n_probes=3, k=10).write.mode(
+                "overwrite"
+            ).format("noop").save()
+            search_trials.append(time.monotonic() - t0)
+        t0 = time.monotonic()
+        ivfpq_index_encode(spark, idx, emb).write.mode("overwrite").format(
+            "noop"
+        ).save()
+        encode_secs = time.monotonic() - t0
+
+        # bulk mode: every ~11th corpus vector queries in ONE plan — the
+        # per-query amortization a pipeline gets vs n single searches
+        qs = emb.filter(F.col("vec_id") % 11 == 0).select(
+            F.col("vec_id").alias("qid"), "embedding"
+        )
+        n_batch = qs.count()
+        t0 = time.monotonic()
+        ivfpq_index_batch_search(spark, idx, qs, n_probes=3, k=10).write.mode(
             "overwrite"
         ).format("noop").save()
-        search_trials.append(time.monotonic() - t0)
-    t0 = time.monotonic()
-    ivfpq_index_encode(spark, idx, emb).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    encode_secs = time.monotonic() - t0
-
-    # bulk mode: every ~11th corpus vector queries in ONE plan — the
-    # per-query amortization a pipeline gets vs n single searches
-    from pyspark.sql import functions as F
-
-    from wolf_quake_spark.analysis.ann_index import ivfpq_index_batch_search
-
-    qs = emb.filter(F.col("vec_id") % 11 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    n_batch = qs.count()
-    t0 = time.monotonic()
-    ivfpq_index_batch_search(spark, idx, qs, n_probes=3, k=10).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    batch_secs = time.monotonic() - t0
+        batch_secs = time.monotonic() - t0
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
     return {
         "build_secs": round(build_secs, 3),
         "search_secs": round(min(search_trials), 3),

@@ -24,7 +24,10 @@ are kept in the artifact (full-distribution policy) but the headline
 median is taken over QUIET trials only, and the harness keeps sampling
 until it has --quiet-trials quiet pairs or hits --max-trials — so a round
 either reports a quiet-window median or machine-labeled evidence that no
-quiet window occurred.
+quiet window occurred.  A probe or a level that fails labels its pair loud
+and records the error, keeping every trial collected so far; the result
+carries ``n_quiet`` against ``quiet_trials_requested`` and sets
+``quiet_undersampled`` when it got fewer quiet pairs than asked for.
 """
 
 from __future__ import annotations
@@ -117,19 +120,33 @@ def ensure_input(turns: int) -> str:
 
 def probe_window(low: int, high: int) -> dict:
     """Run both ceiling probes at the bench's pinned budgets and return
-    {cpu_ceiling, mem_ceiling} — the in-window capacity of this host."""
+    {cpu_ceiling, mem_ceiling} — the in-window capacity of this host.  A
+    probe that fails leaves its ceiling None and its error under
+    ``probe_error``; the pair it brackets then counts as loud."""
     out = {}
     for name, script in (("cpu_ceiling", "cpu_ceiling.py"),
                          ("mem_ceiling", "mem_ceiling.py")):
-        r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "scripts", script),
-             "--low", str(low), "--high", str(high), "--reps", "1"],
-            capture_output=True, text=True, check=True,
-        )
-        out[name] = json.loads(r.stdout.strip().splitlines()[-1])[
-            "ceiling_efficiency"
-        ]
+        try:
+            r = subprocess.run(
+                [sys.executable, os.path.join(REPO, "scripts", script),
+                 "--low", str(low), "--high", str(high), "--reps", "1"],
+                capture_output=True, text=True, check=True,
+            )
+            out[name] = json.loads(r.stdout.strip().splitlines()[-1])[
+                "ceiling_efficiency"
+            ]
+        except (subprocess.CalledProcessError, ValueError, IndexError, KeyError) as e:
+            out[name] = None
+            out["probe_error"] = f"{script}: {_describe(e)}"
     return out
+
+
+def _describe(e: Exception) -> str:
+    """One line for a failed child: its exit status and last stderr line."""
+    if isinstance(e, subprocess.CalledProcessError):
+        tail = (e.stderr or "").strip().splitlines()[-1:] or [""]
+        return f"exit {e.returncode}: {tail[0]}"
+    return f"{type(e).__name__}: {e}"
 
 
 def main() -> None:
@@ -162,14 +179,24 @@ def main() -> None:
     n_quiet = 0
     for t in range(args.max_trials):
         pre = probe_window(args.low, args.high)
-        lo = measure(args.low, path, pin)
-        hi = measure(args.high, path, pin)
+        try:
+            lo = measure(args.low, path, pin)
+            hi = measure(args.high, path, pin)
+        except (subprocess.CalledProcessError, ValueError, IndexError) as e:
+            # a failed level yields no efficiency, but the trials collected
+            # so far are kept and this pair is labeled loud
+            trials.append({"window": "loud", "error": _describe(e), "cpu_ceiling":
+                           pre["cpu_ceiling"], "mem_ceiling": pre["mem_ceiling"]})
+            print(json.dumps({"trial": t, **trials[-1]}), file=sys.stderr)
+            continue
         post = probe_window(args.low, args.high)
         # quiet only if the window held BEFORE and AFTER the pair — a
         # pre-only probe mislabels windows that turn loud mid-trial
-        # (observed: cpu 1.017 pre, job ratio collapsed mid-measure)
+        # (observed: cpu 1.017 pre, job ratio collapsed mid-measure); a
+        # failed probe (ceiling None) means the window is unknown: loud
         quiet = all(
-            p["cpu_ceiling"] >= args.quiet_cpu
+            "probe_error" not in p
+            and p["cpu_ceiling"] >= args.quiet_cpu
             and p["mem_ceiling"] >= args.quiet_mem
             for p in (pre, post)
         )
@@ -183,15 +210,26 @@ def main() -> None:
             "cpu_ceiling_post": post["cpu_ceiling"],
             "mem_ceiling_post": post["mem_ceiling"],
         })
+        errors = [p["probe_error"] for p in (pre, post) if "probe_error" in p]
+        if errors:
+            trials[-1]["error"] = "; ".join(errors)
         print(json.dumps({"trial": t, **trials[-1]}), file=sys.stderr)
         n_quiet += quiet
         if n_quiet >= args.quiet_trials:
             break
-    effs = sorted(t["scaling_efficiency"] for t in trials)
+    measured = [t for t in trials if "scaling_efficiency" in t]
+    if not measured:
+        print(json.dumps({
+            "parallelism_ratio": ratio,
+            "scaling_efficiency": None,
+            "errors": [t["error"] for t in trials],
+        }))
+        sys.exit(1)
+    effs = sorted(t["scaling_efficiency"] for t in measured)
     quiet_effs = sorted(
-        t["scaling_efficiency"] for t in trials if t["window"] == "quiet"
+        t["scaling_efficiency"] for t in measured if t["window"] == "quiet"
     )
-    best = max(trials, key=lambda t: t["scaling_efficiency"])
+    best = max(measured, key=lambda t: t["scaling_efficiency"])
     # primary = the QUIET-window median when any quiet window occurred
     # (self-classified by the in-window ceiling probes, never by the job's
     # own result); the all-trials median and full labeled distribution ride
@@ -201,12 +239,17 @@ def main() -> None:
         "scaling_efficiency": (quiet_effs or effs)[len(quiet_effs or effs) // 2],
         "window_of_headline": "quiet" if quiet_effs else
                               "loud (no quiet window all run)",
+        # a quiet median over fewer pairs than asked for is flagged, not
+        # passed off as the requested sample
+        "n_quiet": n_quiet,
+        "quiet_trials_requested": args.quiet_trials,
+        "quiet_undersampled": n_quiet < args.quiet_trials,
         "efficiency_trials_quiet": quiet_effs,
         "efficiency_trials_all": effs,
         "trials_detail": [
             {k: t[k] for k in
              ("scaling_efficiency", "window", "cpu_ceiling", "mem_ceiling",
-              "cpu_ceiling_post", "mem_ceiling_post")}
+              "cpu_ceiling_post", "mem_ceiling_post", "error") if k in t}
             for t in trials
         ],
         "efficiency_best": best["scaling_efficiency"],

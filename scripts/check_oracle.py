@@ -11,8 +11,9 @@ Set WQS_SWEEP_JSON=/path/to/out.json to ALSO emit the results in the
 driver's CORRECTNESS schema ({rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err} per query) so a judge can union
 driver + builder coverage mechanically instead of re-running queries.
-Oracle-less (rows-only) entries carry "oracle_rows": null and
-"hash_match": null.
+Oracle-less (rows-only) entries carry "oracle_rows": null.  "hash_match"
+is null whenever the value hashes were not compared: an oracle-less
+entry, a Spark or DuckDB error, or a schema mismatch.
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def main() -> None:
         rec = {
             "rows_match": False,
             "schema_match": False,
-            "hash_match": False,
+            "hash_match": None,  # null until the value hashes are compared
             "spark_rows": None,
             "oracle_rows": None,
             "err": None,
@@ -105,7 +106,7 @@ def main() -> None:
         rec["spark_rows"] = len(srows)
         if name not in oracles:
             # rows-only check by design (non-SQL-expressible op)
-            rec.update(rows_match=True, schema_match=True, hash_match=None)
+            rec.update(rows_match=True, schema_match=True)
             print(f"ok?  {name}: rows={len(srows)} (no oracle — rows-only check)")
             continue
         try:

@@ -91,6 +91,10 @@ def test_strict_mode_raises_on_rejects(spark, tmp_path):
     cat = SinkCatalog(spark, str(tmp_path / "strict_out"))
     with pytest.raises(PipelineRejectError):
         run_batch(tr, cat, "b0", strict=True)
+    # the raise comes after every sink, rejects included, has landed
+    assert cat.read_batch("rejects", "b0").count() == 1
+    assert cat.read_batch("kills", "b0").count() == 0
+    assert cat.read_batch("player_ranking", "b0").count() == 0
     # lenient: same input runs clean and routes the reject
     res = run_batch(tr, cat, "b1", strict=False)
     assert res.counts["rejects"] == 1

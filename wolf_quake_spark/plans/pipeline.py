@@ -12,9 +12,10 @@ rejects sink lands if any reject rows exist; lenient keeps going.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from wolf_quake_spark.operators.aggregates import (
@@ -56,6 +57,16 @@ def run_batch(
     back and asserts the on-disk count matches (a full second pass over the
     output — integrity check, off by default).
 
+    Write order: the first sink (``kills``) is written alone on the calling
+    thread, and that job materialises the DISK_ONLY persist.  The remaining
+    sinks are then written concurrently from a thread pool, all reading the
+    persist, so their small jobs overlap instead of queueing behind each
+    other.  Launching every write at once is slower: before the persist
+    exists each write plans and runs its own extract.  Counts come back in
+    the fixed sink order.  A failing concurrent write re-raises once the
+    others have finished, and strict mode raises only once every sink,
+    ``rejects`` included, is on disk.
+
     ``skew_chunk_turns`` switches sessionization to the salted segmented
     scan (operators/sessionize.py::assign_games_salted) so a
     mega-conversation spreads over ``n_turns / skew_chunk_turns`` tasks
@@ -75,7 +86,6 @@ def run_batch(
         sess = assign_games(extract(transcripts))
     sess = sess.persist(StorageLevel.DISK_ONLY)
     try:
-        counts: dict[str, int] = {}
         to_write = dict(route(sess))
         if with_aggregates:
             to_write.update(
@@ -83,15 +93,31 @@ def run_batch(
                 mod_histogram=mod_histogram(sess),
                 player_ranking=player_ranking(sess),
             )
-        for name, df in to_write.items():
-            counts[name] = catalog.write_batch_counted(df, name, batch_id)
+
+        def write(name: str) -> int:
+            n = catalog.write_batch_counted(to_write[name], name, batch_id)
             if verify:
                 on_disk = catalog.read_batch(name, batch_id).count()
-                if on_disk != counts[name]:
+                if on_disk != n:
                     raise RuntimeError(
-                        f"sink {name} batch {batch_id}: wrote {counts[name]} "
+                        f"sink {name} batch {batch_id}: wrote {n} "
                         f"rows but read back {on_disk}"
                     )
+            return n
+
+        first, *rest = to_write
+        counts = {first: write(first)}
+        # Leaving the block joins the pool, so every write has finished,
+        # failed or not, before the finally below unpersists.  Each task
+        # gets its own copy of the caller's local properties and tags: one
+        # shared copy would leak a tag set inside one write into the others.
+        session = sess.sparkSession
+        with ThreadPoolExecutor(max_workers=len(rest)) as pool:
+            pending = [
+                (name, pool.submit(inheritable_thread_target(session)(write), name))
+                for name in rest
+            ]
+        counts.update((name, fut.result()) for name, fut in pending)
         if strict and counts.get("rejects", 0) > 0:
             raise PipelineRejectError(
                 f"strict mode: {counts['rejects']} reject rows in batch {batch_id}"
